@@ -12,16 +12,7 @@ object Bench {
     val outPath = args.headOption
       .orElse(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
       .getOrElse("BENCH_FULL.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // warm up codegen/JIT and the parquet footer cache so the first
     // measured query doesn't absorb session startup cost
     try {
@@ -184,10 +175,10 @@ object Bench {
     // streaming cost only in `first` — which mixes fixture write, JIT
     // and boot variance (±0.5 s between identical rounds), so a
     // kernel regression had to beat boot noise in one cold sample to
-    // be visible. This pass re-executes each gate with the memo
-    // bypassed AFTER warmup: fixtures are memoized and codegen/JIT is
-    // hot, so the sample is the tracked steady-state series PLANS.md
-    // compares round over round. Disable with
+    // be visible. This pass re-executes each gate from the unmemoized
+    // SparkEntry.gates map AFTER warmup: fixtures are memoized and
+    // codegen/JIT is hot, so the sample is the tracked steady-state
+    // series PLANS.md compares round over round. Disable with
     // SPARK_GRAFT_STREAM_MEMOOFF=0.
     // Round 18: the INNER memos are bypassed too (memoStreamInnerEnabled
     // — scd2/sync/vector_sync memoize their folded end state per dir,
@@ -202,12 +193,12 @@ object Bench {
         (Seq.empty, Seq.empty)
       else {
         ioMsMemoOff = ioProbeMs()
-        SparkEntry.memoStreamGatesEnabled = false
         SparkEntry.memoStreamInnerEnabled = false
         try {
+          val raw = SparkEntry.gates
           val runs = sorted.collect {
-            case (name, fn) if name.startsWith("stream_") =>
-              val (s, e) = timed(fn)
+            case (name, _) if name.startsWith("stream_") =>
+              val (s, e) = timed(raw(name))
               System.err.println(f"[bench] memo-off $name%-26s $s%8.2f s" +
                 e.map(m => s"  ERROR: $m").getOrElse(""))
               (name, s, e)
@@ -216,10 +207,7 @@ object Bench {
             runs.collect { case (n, _, Some(e)) =>
               (n, e.replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)) })
         }
-        finally {
-          SparkEntry.memoStreamGatesEnabled = true
-          SparkEntry.memoStreamInnerEnabled = true
-        }
+        finally SparkEntry.memoStreamInnerEnabled = true
       }
     val total = results.map(_._2).sum
     // contention diagnostic: host steal percentage over the measured

@@ -10,9 +10,9 @@ import graft.expressions.{PortableMinHash, PortableSimHash, SignBits, VecDot, Wo
   * expressions as SQL functions, so `spark.sql` users (and external
   * SQL tooling) reach the codegen kernels without the Scala API.
   *
-  * Activate with either
+  * Activate on the session builder with either
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * `.withExtensions(new GraftExtensions)`.
   *
   * - `vec_dot(a, b)`            — dot product of float/double arrays
   * - `sign_bits(v, planes, dims)` — hyperplane sign-bit string for LSH

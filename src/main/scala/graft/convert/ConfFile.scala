@@ -91,7 +91,8 @@ object ConfFile {
   }
 
   /** Parse CLI args into (params, confFile). Accepts both `-opt value`
-    * and `-opt=value` forms for value options, like GetOptions.
+    * and `-opt=value` forms for value options, like GetOptions; a
+    * switch is `-opt` (on) or `-opt=<bool>` (e.g. `-use_identity_column=0`).
     */
   def parseCli(args: Seq[String]): Seq[(String, String)] = {
     val out = Seq.newBuilder[(String, String)]
@@ -113,7 +114,7 @@ object ConfFile {
               throw ConfException(s"Option -$name requires a value")
             out += name -> args(i + 1); i += 1
         }
-      } else if (boolOpts(name)) out += name -> "1"
+      } else if (boolOpts(name)) out += name -> inline.getOrElse("1")
       else throw ConfException(s"Unknown option -$name")
       i += 1
     }

@@ -30,19 +30,16 @@ object CopyPipeline {
   }
 
   /** B4: read-side normalization projection — `sql_convert_column`
-    * (pl:436–460) re-expressed as Catalyst columns:
-    * uuid → lower, date/timestamp → ISO text (styles 120/121), xml →
+    * (pl:436–460) re-expressed as Catalyst columns: uuid → lower, xml →
     * NULL when effectively empty. Applied per declared source type.
+    * Date and time columns pass through typed: Spark ships typed values
+    * to the sink (P14), so fractional seconds survive and a PG
+    * `timestamp` column receives a timestamp, not text.
     */
   def readSideExpr(colName: String, sourceType: String): Column = {
     val c = col(colName)
     sourceType.toLowerCase match {
       case "uniqueidentifier" => lower(c).as(colName)
-      case "date" => date_format(c, "yyyy-MM-dd").as(colName)
-      case "datetime" | "datetime2" | "smalldatetime" =>
-        date_format(c, "yyyy-MM-dd HH:mm:ss").as(colName) // style 120
-      case "datetimeoffset" =>
-        date_format(c, "yyyy-MM-dd HH:mm:ss.SSSXXX").as(colName) // style 121
       case "xml" =>
         when(length(c) > 5, c).otherwise(lit(null)).as(colName)
       case _ => c.as(colName)

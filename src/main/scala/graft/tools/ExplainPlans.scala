@@ -1,26 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print formatted physical plans for headline queries — the
   * scale-review loop: check pushdown (PushedFilters/ReadSchema),
   * broadcast vs shuffle joins, and WholeStageCodegen coverage.
   */
 object ExplainPlans {
   def main(args: Array[String]): Unit = {
-    // real plans/timings, not the memoized stream-gate block read
-    graft.SparkEntry.memoStreamGatesEnabled = false
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
+    val spark = graft.GraftSession.local()
+    // real plans, not the memoized stream-gate block read
+    graft.SparkEntry.gates.toSeq.sortBy(_._1)
       .filter(q => names.isEmpty || names.contains(q._1))
       .foreach { case (name, fn) =>
         println(s"\n########## $name ##########")

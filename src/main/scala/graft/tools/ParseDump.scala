@@ -1,34 +1,34 @@
 package graft.tools
 
-import graft.parser._
-import graft.convert._
+import graft.convert.ConfFile
+import graft.parser.{ParseException, TsqlParser}
 import java.nio.file.Paths
 
 /** CLI: parse a SQL Server DDL dump and print the catalog summary.
   * Mirrors the reference's front half (sqlserver2pgsql.pl -f) — the DDL
-  * emitters hang off the same Catalog (see graft.emit).
+  * emitters hang off the same Catalog (see graft.emit). Options are
+  * [[Main]]'s (conf file included); the dump is `-f <dump>` or the
+  * first argument.
   *
-  * Usage: runMain graft.tools.ParseDump <dump.sql> [-i] [-num]
-  *   [-camel_to_snake] [-keep_identifier_case] [-drop_rowversion]
+  * Usage: runMain graft.tools.ParseDump <dump.sql> [Main options]
   */
 object ParseDump {
   def main(args: Array[String]): Unit = {
-    if (args.isEmpty) { System.err.println("usage: ParseDump <dump.sql> [options]"); sys.exit(2) }
-    val file = args.head
-    val conf = args.tail.foldLeft(Config()) {
-      case (c, "-i") => c.copy(caseInsensitive = true)
-      case (c, "-num") => c.copy(convertNumericToInt = true)
-      case (c, "-camel_to_snake") =>
-        c.copy(identifierCase = IdentifierCase.CamelToSnake)
-      case (c, "-keep_identifier_case") =>
-        c.copy(identifierCase = IdentifierCase.Keep)
-      case (c, "-drop_rowversion") => c.copy(dropRowversion = true)
-      case (c, "-nr") => c.copy(relabelDbo = false)
-      case (c, other) =>
-        System.err.println(s"unknown option $other"); sys.exit(2); c
+    val opts = args.headOption match {
+      case Some(a) if !a.startsWith("-") => "-f" +: args.toSeq
+      case _ => args.toSeq
+    }
+    val job =
+      try Main.buildJob(opts)
+      catch {
+        case e: ConfFile.ConfException =>
+          System.err.println(e.msg); sys.exit(2); return
+      }
+    val file = job.dumpFile.getOrElse {
+      System.err.println("usage: ParseDump <dump.sql> [options]"); sys.exit(2); return
     }
     val cat =
-      try new TsqlParser(conf).parseFile(Paths.get(file))
+      try new TsqlParser(job.config).parseFile(Paths.get(file))
       catch {
         case e: ParseException =>
           System.err.println(s"parse error: ${e.getMessage}"); sys.exit(1)

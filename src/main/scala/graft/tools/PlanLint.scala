@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -66,22 +66,14 @@ object PlanLint {
     hits(df.queryExecution.executedPlan).map(h => s"$name: $h")
 
   def main(args: Array[String]): Unit = {
-    // real plans/timings, not the memoized stream-gate block read
-    graft.SparkEntry.memoStreamGatesEnabled = false
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     var unapproved = 0
     var approvedHits = 0
     var errors = 0
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
+    // real plans, not the memoized stream-gate block read
+    graft.SparkEntry.gates.toSeq.sortBy(_._1)
       .filter(q => names.isEmpty || names.contains(q._1))
       .foreach { case (name, fn) =>
         try {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job wall-time attribution for one or more declared queries —
   * the measure-first loop (optimization guide §1): is a gate's time
@@ -13,18 +12,9 @@ import org.apache.spark.sql.SparkSession
   */
 object ProbeJobs {
   def main(args: Array[String]): Unit = {
-    graft.SparkEntry.memoStreamGatesEnabled = false
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     final case class Job(id: Int, t0: Long, var t1: Long = -1L,
       var stages: Int = 0, var tasks: Int = 0, var taskMs: Long = 0L,
       val stageDesc: scala.collection.mutable.ArrayBuffer[String] =
@@ -58,7 +48,8 @@ object ProbeJobs {
         }
       }
     })
-    graft.SparkEntry.queries.toSeq.sortBy(_._1)
+    // real plans, not the memoized stream-gate block read
+    graft.SparkEntry.gates.toSeq.sortBy(_._1)
       .filter(q => names.isEmpty || names.contains(q._1))
       .foreach { case (name, fn) =>
         (1 to 2).foreach { run =>

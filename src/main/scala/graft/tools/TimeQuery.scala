@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Time individual SparkEntry queries standalone (perf iteration aid).
   * Usage: runMain graft.tools.TimeQuery <sfDir> <query>[ <query>…]
   * Each query runs twice; the second run is reported (first absorbs
@@ -11,20 +9,11 @@ object TimeQuery {
   def main(args: Array[String]): Unit = {
     // real plans/timings, not the memoized stream-gate block read —
     // including the inner end-state memos of the sync-shaped gates
-    graft.SparkEntry.memoStreamGatesEnabled = false
     graft.SparkEntry.memoStreamInnerEnabled = false
+    val gates = graft.SparkEntry.gates
     val sfDir = args.head
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     // SPARK_GRAFT_WARM_DIR: optionally pre-run each query against a
     // different (smaller) SF first — reproduces Bench's warmup regime
     sys.env.get("SPARK_GRAFT_WARM_DIR").foreach { wd =>
@@ -32,7 +21,7 @@ object TimeQuery {
         // NonFatal only: a broken warm dir must be visible, and fatal
         // errors (OOM, dying JVM) must propagate, not silently produce
         // cold timings
-        try graft.SparkEntry.queries(name)(spark, wd).count()
+        try gates(name)(spark, wd).count()
         catch {
           case scala.util.control.NonFatal(e) =>
             System.err.println(s"[time] warmup $name failed: ${e.getMessage}")
@@ -41,7 +30,7 @@ object TimeQuery {
       }
     }
     names.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
+      val fn = gates(name)
       (1 to 2).foreach { run =>
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir).count()

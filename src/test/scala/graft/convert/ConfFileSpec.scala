@@ -47,6 +47,8 @@ class ConfFileSpec extends AnyFunSuite {
     assert(m("po") === "16")
     assert(m("validate_constraints") === "after")
     assert(m("i") === "1" && m("nr") === "1")
+    assert(!ConfFile.toJob(ConfFile.merge(ConfFile.parseCli(Seq(
+      "-use_identity_column=0")))).config.useIdentityColumn)
     intercept[ConfFile.ConfException] { ConfFile.parseCli(Seq("-bogus")) }
     intercept[ConfFile.ConfException] { ConfFile.parseCli(Seq("-f")) }
   }

@@ -54,13 +54,25 @@ class OptionMatrixSpec extends AnyFunSuite {
   }
 
   test("colmap lineage covers every table under every policy") {
-    for ((_, conf) <- configs.take(5)) {
-      val cat = new TsqlParser(conf)
-        .parseFile(Paths.get("/root/reference/regression/issue_59.sql"))
+    // hand-written fixture: dbo plus a second schema, a camelCase table,
+    // a bracketed name with a space, reserved-word columns and a
+    // >63-byte column
+    val in = getClass.getResourceAsStream("/tsql/colmap_lineage.sql")
+    assert(in != null, "colmap_lineage.sql missing from the test classpath")
+    val lines =
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
+      finally in.close()
+    for ((optName, conf) <- configs.take(5)) {
+      val cat = new TsqlParser(conf).parse(lines)
+      assert(cat.allTables.size === 3, optName)
+      assert(cat.allTables.map(_._2.origSchema).toSet === Set("dbo", "sales"))
       val out = new PgDdlEmitter(conf).emit(cat)
       cat.allTables.foreach { case (_, t) =>
         assert(out.colMap.contains(s".${t.name}\t"),
-          s"colmap missing ${t.name}")
+          s"$optName: colmap missing ${t.name}")
+        t.cols.foreach(c => assert(
+          out.colMap.contains(s"${t.origSchema}.${t.name}.${c.name}\t"),
+          s"$optName: colmap missing ${t.name}.${c.name}"))
       }
     }
   }

@@ -19,14 +19,23 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
 
   test("B4: read-side normalization per source type") {
     import spark.implicits._
-    val df = Seq(("ABC-DEF", "<x>hello</x>", "<2ch")).toDF("u", "x1", "x2")
+    val ts = java.sql.Timestamp.valueOf("2024-03-01 12:34:56.123456")
+    val day = java.sql.Date.valueOf("2024-03-01")
+    val df = Seq(("ABC-DEF", "<x>hello</x>", "<2ch", ts, day))
+      .toDF("u", "x1", "x2", "ts", "d")
     val out = df.select(
       CopyPipeline.readSideExpr("u", "uniqueidentifier"),
       CopyPipeline.readSideExpr("x1", "xml"),
-      CopyPipeline.readSideExpr("x2", "xml")).collect()(0)
+      CopyPipeline.readSideExpr("x2", "xml"),
+      CopyPipeline.readSideExpr("ts", "datetime2"),
+      CopyPipeline.readSideExpr("d", "date")).collect()(0)
     assert(out.getString(0) === "abc-def")
     assert(out.getString(1) === "<x>hello</x>")
     assert(out.isNullAt(2)) // effectively-empty xml → NULL (pl:452)
+    // temporal values pass through typed, microseconds intact
+    assert(out.getTimestamp(3) === ts)
+    assert(out.getTimestamp(3).getNanos === 123456000)
+    assert(out.getDate(4) === day)
   }
 
   test("C3: modulo buckets partition completely and disjointly") {

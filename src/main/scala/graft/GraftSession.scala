@@ -16,7 +16,7 @@ object GraftSession {
     * AQE on, and the legacy nanos-as-long parquet read: events.parquet
     * `ts` arrives as INT64 TIMESTAMP(NANOS) in some fixture generations
     * (read as long under this conf) and TIMESTAMP(MICROS, NTZ) in
-    * others — SparkEntry.events() normalizes both to a UTC instant.
+    * others — gates.Fixtures.events normalizes both to a UTC instant.
     */
   def local(cpus: Int = envCpus): SparkSession = {
     val spark = SparkSession.builder()

@@ -189,6 +189,19 @@ object ConfFile {
   }
 
   def toJob(p: Map[String, String]): Job = {
+    def positiveInt(key: String, default: Int): Int =
+      p.get(key).fold(default) { v =>
+        v.trim.toIntOption.filter(_ > 0).getOrElse(throw ConfException(
+          s"$key must be a positive integer, got '$v'"))
+      }
+    val validate = p.getOrElse("validate_constraints", "yes")
+    if (!Set("yes", "after", "no")(validate)) throw ConfException(
+      s"validate_constraints must be yes, after or no, got '$validate'")
+    // a force-ssl switch is kept only when on: the JDBC URLs and the
+    // Kettle connections test for the key's presence
+    def endpoint(keys: Seq[String], ssl: String): Map[String, String] =
+      (keys.flatMap(k => p.get(k).map(k -> _)) ++
+        p.get(ssl).filter(boolOf).map(ssl -> _)).toMap
     val keep = p.get("keep_identifier_case").exists(boolOf)
     val camel = p.get("camel_to_snake").exists(boolOf)
     if (keep && camel) throw ConfException(
@@ -206,10 +219,10 @@ object ConfFile {
       relabelDbo = !p.get("nr").exists(boolOf),
       relabelSchemas = p.get("relabel_schemas").map(parseRelabel)
         .getOrElse(Map.empty),
-      validateConstraints = p.getOrElse("validate_constraints", "yes"),
-      parallelismIn = p.get("pi").map(_.trim.toInt).getOrElse(1),
-      parallelismOut = p.get("po").map(_.trim.toInt).getOrElse(8),
-      sortSize = p.get("sort_size").map(_.trim.toInt).getOrElse(10000),
+      validateConstraints = validate,
+      parallelismIn = positiveInt("pi", 1),
+      parallelismOut = positiveInt("po", 8),
+      sortSize = positiveInt("sort_size", 10000),
       ignoreErrors = p.get("ignore_errors").exists(boolOf),
       skipCitextLengthCheck = p.get("skip_citext_length_check").exists(boolOf),
       usePkIfPossible = p.getOrElse("use_pk_if_possible", ""),
@@ -224,9 +237,8 @@ object ConfFile {
       colMapFile = p.get("col_map_file"),
       colMapHeader = p.get("col_map_file_header").exists(boolOf),
       colMapDelimiter = p.getOrElse("col_map_file_delimiter", "\t"),
-      sqlServer = Seq("sd", "sh", "si", "sp", "su", "sw", "sforce_ssl")
-        .flatMap(k => p.get(k).map(k -> _)).toMap,
-      postgres = Seq("pd", "ph", "pp", "pu", "pw", "pforce_ssl")
-        .flatMap(k => p.get(k).map(k -> _)).toMap)
+      sqlServer = endpoint(Seq("sd", "sh", "si", "sp", "su", "sw"),
+        "sforce_ssl"),
+      postgres = endpoint(Seq("pd", "ph", "pp", "pu", "pw"), "pforce_ssl"))
   }
 }

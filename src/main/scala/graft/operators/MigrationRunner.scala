@@ -128,7 +128,7 @@ object MigrationRunner {
           } catch {
             case e: Exception =>
               TableResult(sn, t.name, -1L, (System.nanoTime() - t0) / 1e9,
-                Some(e.getMessage))
+                Some(Option(e.getMessage).getOrElse(e.getClass.getName)))
           }
         }
       }

@@ -9,10 +9,9 @@ object ExplainPlans {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
     val spark = graft.GraftSession.local()
-    // real plans, not the memoized stream-gate block read
-    graft.SparkEntry.gates.toSeq.sortBy(_._1)
-      .filter(q => names.isEmpty || names.contains(q._1))
-      .foreach { case (name, fn) =>
+    graft.SparkEntry.gates.sortBy(_.name)
+      .filter(g => names.isEmpty || names.contains(g.name))
+      .foreach { case graft.gates.Gate(name, fn, _) =>
         println(s"\n########## $name ##########")
         try {
           val df = fn(spark, dir)

@@ -72,10 +72,9 @@ object PlanLint {
     var unapproved = 0
     var approvedHits = 0
     var errors = 0
-    // real plans, not the memoized stream-gate block read
-    graft.SparkEntry.gates.toSeq.sortBy(_._1)
-      .filter(q => names.isEmpty || names.contains(q._1))
-      .foreach { case (name, fn) =>
+    graft.SparkEntry.gates.sortBy(_.name)
+      .filter(g => names.isEmpty || names.contains(g.name))
+      .foreach { case graft.gates.Gate(name, fn, _) =>
         try {
           val found = lint(name, fn(spark, dir))
           if (found.nonEmpty) {

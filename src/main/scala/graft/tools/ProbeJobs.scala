@@ -48,10 +48,9 @@ object ProbeJobs {
         }
       }
     })
-    // real plans, not the memoized stream-gate block read
-    graft.SparkEntry.gates.toSeq.sortBy(_._1)
-      .filter(q => names.isEmpty || names.contains(q._1))
-      .foreach { case (name, fn) =>
+    graft.SparkEntry.gates.sortBy(_.name)
+      .filter(g => names.isEmpty || names.contains(g.name))
+      .foreach { case graft.gates.Gate(name, fn, _) =>
         (1 to 2).foreach { run =>
           jobs.clear(); order.clear()
           val t0 = System.nanoTime()

@@ -1,16 +1,13 @@
 package graft.tools
 
-/** Time individual SparkEntry queries standalone (perf iteration aid).
+/** Time individual gates standalone (perf iteration aid).
   * Usage: runMain graft.tools.TimeQuery <sfDir> <query>[ <query>…]
   * Each query runs twice; the second run is reported (first absorbs
   * JIT/codegen warmup, like Bench's session warmup but per-query).
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
-    // real plans/timings, not the memoized stream-gate block read —
-    // including the inner end-state memos of the sync-shaped gates
-    graft.SparkEntry.memoStreamInnerEnabled = false
-    val gates = graft.SparkEntry.gates
+    val gates = graft.SparkEntry.gates.map(g => g.name -> g.build).toMap
     val sfDir = args.head
     val names = args.tail.toSeq
     val spark = graft.GraftSession.local()

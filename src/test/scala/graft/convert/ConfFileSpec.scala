@@ -1,11 +1,11 @@
 package graft.convert
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 /** Conf-file + CLI option binding — the reference's parse_conf_file
   * (sqlserver2pgsql.pl:80–151) and GetOptions matrix (pl:3272–3312),
-  * including the example_conf_file shipping with the reference.
+  * including a conf file that sets every known key.
   */
 class ConfFileSpec extends AnyFunSuite {
 
@@ -96,6 +96,50 @@ class ConfFileSpec extends AnyFunSuite {
     val write = graft.operators.JdbcSink.specFromJob(job, "public.t")
     assert(write.numPartitions === 12 && write.user === "pg")
     assert(write.url.startsWith("jdbc:postgresql://pg.example:5433/tgtdb"))
+    assert(kettleXml(job).contains("EXTRA_OPTION_MSSQL.ssl"))
+    assert(kettleXml(job).contains("EXTRA_OPTION_POSTGRESQL.ssl"))
+
+    // a switch set to 0 is off, in both the CLI and the conf-file form
+    val cliOff = ConfFile.toJob(ConfFile.merge(ConfFile.parseCli(Seq(
+      "-sd", "srcdb", "-sforce_ssl=0", "-pd", "tgtdb", "-pforce_ssl=0"))))
+    val confOff = ConfFile.toJob(ConfFile.merge(ConfFile.parseConfLines(Seq(
+      "sql server database = srcdb", "sql server force ssl = 0",
+      "postgresql database = tgtdb", "postgresql force ssl = 0"))))
+    for (off <- Seq(cliOff, confOff)) {
+      assert(!off.sqlServerUrl.get.contains("encrypt"))
+      assert(!off.postgresUrl.get.contains("sslmode"))
+      val xml = kettleXml(off)
+      assert(!xml.contains("EXTRA_OPTION_MSSQL.ssl"))
+      assert(!xml.contains("EXTRA_OPTION_POSTGRESQL.ssl"))
+    }
+  }
+
+  /** The Kettle copy transformation of a one-table dump, emitted with
+    * the job's connection params.
+    */
+  private def kettleXml(job: ConfFile.Job): String = {
+    val cat = new graft.parser.TsqlParser(job.config).parse(Seq(
+      "CREATE TABLE [dbo].[t](", "\t[id] [int] NOT NULL", ") ON [PRIMARY]",
+      "GO"))
+    new graft.emit.KettleEmitter(job.config, job.sqlServer, job.postgres)
+      .emit(cat, "/tmp/kettle").values.head
+  }
+
+  test("bad option values die: validate_constraints, pi, po, sort_size") {
+    def job(args: String*) =
+      ConfFile.toJob(ConfFile.merge(ConfFile.parseCli(args)))
+    for (bad <- Seq(Seq("-validate_constraints=afetr"), Seq("-po", "abc"),
+        Seq("-pi", "0"), Seq("-po", "-3"), Seq("-sort_size", "1.5"))) {
+      val e = intercept[ConfFile.ConfException](job(bad: _*))
+      assert(e.msg.contains(bad.head.drop(1).takeWhile(_ != '=')), e.msg)
+    }
+    assert(job("-validate_constraints", "no").config.validateConstraints === "no")
+    assert(job("-pi", " 3 ").config.parallelismIn === 3)
+    // Main turns the ConfException into the usage text and exit code 2
+    // (see Main.main); buildJob is where it surfaces
+    intercept[ConfFile.ConfException] {
+      graft.tools.Main.buildJob(Seq("-po", "abc"))
+    }
   }
 
   test("buildJob is embeddable: -h does not exit the JVM") {
@@ -119,29 +163,45 @@ class ConfFileSpec extends AnyFunSuite {
       base.copy(skipCitextLengthCheck = true)).generatedCheck.isEmpty)
   }
 
-  test("the reference's example_conf_file parses (uncommented)") {
-    val p = Paths.get("/root/reference/example_conf_file")
-    assume(Files.exists(p))
-    import scala.jdk.CollectionConverters._
-    // activate the commented-out option lines too: they must all be
-    // understood keys (drop the leading # from "#key = value" lines)
-    val lines = Files.readAllLines(p).asScala.toSeq.map { l =>
-      if (l.matches("^#[a-z].*=.*")) l.drop(1) else l
-    }
+  test("a conf file setting every key parses and binds") {
+    val lines = scala.io.Source.fromResource("conf/example.conf")
+      .getLines().toSeq
+    val keys = lines.map(_.replaceAll("#.*", "")).filter(_.contains("="))
+      .map(_.takeWhile(_ != '=').trim)
+    assert(keys.toSet === ConfFile.keyToParam.keySet)
     val job = ConfFile.toJob(ConfFile.merge(ConfFile.parseConfLines(lines)))
-    assert(job.dumpFile === Some("/tmp/dump"))
-    assert(job.beforeFile === Some("/tmp/before"))
-    assert(job.afterFile === Some("/tmp/after"))
-    assert(job.unsureFile === Some("/tmp/unsure"))
-    assert(job.kettleDir === Some("/tmp/kettle"))
-    assert(job.config.relabelSchemas === Map("dbo" -> "foo", "schema1" -> "bar"))
-    assert(job.config.validateConstraints === "yes")
+    assert(job.dumpFile === Some("/data/sales/schema.sql"))
+    assert(job.beforeFile === Some("/data/sales/out/before.sql"))
+    assert(job.afterFile === Some("/data/sales/out/after.sql"))
+    assert(job.unsureFile === Some("/data/sales/out/unsure.sql"))
+    assert(job.kettleDir === Some("/data/sales/kettle"))
+    assert(job.colMapFile === Some("/data/sales/out/colmap.csv"))
+    assert(job.colMapHeader && job.colMapDelimiter === ";")
+    val c = job.config
+    assert(c.caseInsensitive && c.relabelDbo)
+    assert(c.relabelSchemas === Map("dbo" -> "app", "staging" -> "stage"))
+    assert(c.identifierCase === IdentifierCase.CamelToSnake)
+    assert(c.convertNumericToInt && c.dropRowversion)
+    assert(c.validateConstraints === "after")
+    assert(c.skipCitextLengthCheck && !c.useIdentityColumn)
+    assert(c.parallelismIn === 2 && c.parallelismOut === 6)
+    assert(c.sortSize === 20000 && c.ignoreErrors)
+    assert(c.usePkIfPossible === "app.orders,order_lines")
+    assert(c.stringtypeUnspecified)
+    assert(job.sqlServerUrl === Some("jdbc:sqlserver://mssql.internal:1433" +
+      ";instanceName=SQLEXPRESS;databaseName=sales_src" +
+      ";encrypt=true;trustServerCertificate=true"))
+    assert(job.sqlServer("su") === "migrator" && job.sqlServer("sw") === "src-secret")
+    assert(job.postgresUrl === Some(
+      "jdbc:postgresql://pg.internal:5433/sales?stringtype=unspecified"))
+    assert(job.postgres("pu") === "loader" && job.postgres("pw") === "pg-secret")
   }
 
   test("Main converts a dump end-to-end from a conf file") {
     val dir = Files.createTempDirectory("graft_conf")
-    val dump = Paths.get("/root/reference/regression/basic_test/views.sql")
-    assume(Files.exists(dump))
+    val dump = dir.resolve("dump.sql")
+    val in = getClass.getResourceAsStream("/tsql/colmap_lineage.sql")
+    try Files.copy(in, dump) finally in.close()
     val conf = dir.resolve("job.conf")
     Files.writeString(conf,
       s"""# graft job conf
@@ -153,10 +213,16 @@ class ConfFileSpec extends AnyFunSuite {
          |col map file header      = 1
          |convert numeric to int   = 1
          |""".stripMargin)
-    val job = graft.tools.Main.buildJob(Seq("-conf", conf.toString))
-    assert(job.config.convertNumericToInt)
-    graft.tools.Main.main(Array("-conf", conf.toString))
-    assert(Files.readString(dir.resolve("before.sql")).contains("CREATE TABLE"))
-    assert(Files.readString(dir.resolve("colmap.txt")).startsWith("source"))
+    try {
+      val job = graft.tools.Main.buildJob(Seq("-conf", conf.toString))
+      assert(job.config.convertNumericToInt)
+      graft.tools.Main.main(Array("-conf", conf.toString))
+      assert(Files.readString(dir.resolve("before.sql")).contains("CREATE TABLE"))
+      assert(Files.readString(dir.resolve("colmap.txt")).startsWith("source"))
+    } finally {
+      val files = Files.list(dir)
+      try files.forEach(f => Files.delete(f)) finally files.close()
+      Files.delete(dir)
+    }
   }
 }

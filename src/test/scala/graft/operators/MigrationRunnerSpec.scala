@@ -22,23 +22,31 @@ class MigrationRunnerSpec extends AnyFunSuite with SparkTestBase {
       |GO""".stripMargin
 
   test("runAll copies catalog tables concurrently and reports errors") {
-    val cat = new TsqlParser(Config()).parse(ddl.split("\n").toSeq)
+    val cat = new TsqlParser(Config()).parse((ddl +
+      "\nCREATE TABLE [dbo].[broken](\n\t[id] [int] NOT NULL\n) ON [PRIMARY]\nGO")
+      .split("\n").toSeq)
     val sf = "/root/testdata/sf0.001"
     val results = MigrationRunner.runAll(spark, cat,
       read = (_, t) =>
         if (t.name == "orders")
           Some(spark.read.parquet(s"$sf/orders.parquet")
             .select(col("o_orderkey"), col("o_orderstatus")))
+        else if (t.name == "broken") throw new RuntimeException()
         else None,
       sink = (_, _, df) => df.count(),
       parallelism = 2)
-    assert(results.length === 2)
+    assert(results.length === 3)
     val ok = results.find(_.table == "orders").get
     assert(ok.rows === 1500 && ok.error.isEmpty)
     val missing = results.find(_.table == "missing_table").get
     assert(missing.error === Some("source not found"))
+    // a message-less exception is reported by its class, never "null"
+    val broken = results.find(_.table == "broken").get
+    assert(broken.error === Some("java.lang.RuntimeException"))
     val rep = MigrationRunner.report(results)
     assert(rep.contains("public.orders") && rep.contains("rows/s"))
+    assert(rep.contains("ERROR: java.lang.RuntimeException") &&
+      !rep.contains("ERROR: null"))
   }
 
   test("prologue/epilogue emit trigger toggles per table") {

@@ -498,11 +498,6 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       assert(lost.getMessage.toLowerCase.contains("checkpoint"),
         s"expected the local-checkpoint block loss failure, got: ${lost.getMessage.take(120)}")
     } finally {
-      // the blanket block wipe above also invalidated any
-      // localCheckpoint-backed gate-result memo populated by earlier
-      // suites in this shared-session JVM — clear them so a later
-      // gate-consuming suite rebuilds instead of reading dead blocks
-      graft.SparkEntry.clearResultMemos()
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).foreach(_.foreach(rm)); f.delete()
       }

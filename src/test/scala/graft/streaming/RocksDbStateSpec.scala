@@ -41,6 +41,9 @@ class RocksDbStateSpec extends AnyFunSuite with SparkTestBase {
 
   private val sfDir = "/root/testdata/sf0.001"
 
+  private def gateBuild(name: String) =
+    graft.SparkEntry.gates.find(_.name == name).get.build
+
   /** Every stateful streaming gate: the whole keyed-state family
     * (flatMapGroupsWithState ops and their TTL twins) plus the
     * built-in stateful operators (streaming dedup, windowed/session
@@ -62,7 +65,7 @@ class RocksDbStateSpec extends AnyFunSuite with SparkTestBase {
 
   gates.foreach { g =>
     test(s"$g is bit-identical under RocksDB and the default provider") {
-      val fn = graft.SparkEntry.queries(g)
+      val fn = gateBuild(g)
       def run(p: Option[String]): Seq[String] = withProvider(p) {
         fn(spark, sfDir).collect().map(_.toString).sorted.toSeq
       }
@@ -89,7 +92,7 @@ class RocksDbStateSpec extends AnyFunSuite with SparkTestBase {
 
   changelogGates.foreach { g =>
     test(s"$g is bit-identical under RocksDB changelog checkpointing") {
-      val fn = graft.SparkEntry.queries(g)
+      val fn = gateBuild(g)
       def run(p: Option[String], changelog: Boolean): Seq[String] = {
         val old = spark.conf.getOption(ChangelogKey)
         if (changelog) spark.conf.set(ChangelogKey, "true")
